@@ -11,6 +11,13 @@ resize_aspect_ratio pads every image to a multiple of 256 per side
 (imageops.py resize_aspect_ratio), collapsing the corpus into a handful of
 distinct tensor shapes.
 
+Streaming: a shape group runs its forward, post-processing, OCR and
+reading order as soon as it holds max_batch_size spans, then drops its
+images and tensors; the partial groups run after the last span. So a
+worker holds at most (distinct shapes x max_batch_size) rendered spans,
+however long the Arrow batch, and the forward calls are the same as if the
+whole batch had been staged first.
+
 Output parity: phase A is detect_pre + infer_pre, phase C is infer_post +
 detect_post — the exact single-image functions detector.detect composes —
 so (kind, text, media_ref, order) rows are identical to the per-span path;
@@ -29,8 +36,6 @@ errors — one bad payload can never take its batch-mates down with it.
 """
 
 from __future__ import annotations
-
-from collections import defaultdict
 
 import numpy as np
 
@@ -63,6 +68,28 @@ def effective_pre(pre: PreprocessorOptions) -> PreprocessorOptions:
     )
 
 
+def _error_row(span: tuple, e: Exception) -> tuple:
+    doc_id, ref, off = span
+    message = f"{type(e).__name__}: {e}"[:500]
+    return (doc_id, "error", message, str(ref), int(off) * SPAN_STRIDE)
+
+
+def _media_rows(span: tuple, img: np.ndarray, quads: list) -> list[tuple]:
+    """OCR + reading order exactly as oracle.extract_media_span."""
+    doc_id, ref, off = span
+    ref, off = str(ref), int(off)
+    if not quads:
+        return [(doc_id, "media", "", ref, span_order(off, 0))]
+    ranks = reading_order(quads)
+    texts = decode_quads(img, quads)
+    return [
+        (doc_id, "media", text, ref, order)
+        for order, text in sorted(
+            (span_order(off, int(r)), t) for r, t in zip(ranks, texts)
+        )
+    ]
+
+
 def extract_media_spans_batched(
     spans: list[tuple],
     opts: DetectorOptions,
@@ -74,22 +101,46 @@ def extract_media_spans_batched(
     """[(doc_id, media_ref, offset)] -> rows
     (doc_id, kind, text, media_ref, order), packing forwards across spans.
 
-    Three phases over the whole span list:
-      A. per span: render + detect_pre + infer_pre -> (tensor, ctx); spans
-         on the rearrange path (already patch-batched internally) run the
-         single-image detect directly.
-      B. group tensors by shape, stack <= opts.max_batch_size per forward
-         call; on a packed-call exception, retry each image alone so only
-         the poisoned one errors.
-      C. per span: infer_post + detect_post -> quads, then OCR + reading
-         order exactly as oracle.extract_media_span.
+    One streaming pass over the span list:
+      A. per span: render + detect_pre + infer_pre -> (tensor, ctx), appended
+         to its tensor shape's group; spans on the rearrange path (already
+         patch-batched internally) run the single-image detect directly.
+      B. a group that reaches opts.max_batch_size runs as one stacked
+         forward call; on a packed-call exception, each image is retried
+         alone so only the poisoned one errors.
+      C. per span of that call: infer_post + detect_post -> quads, then OCR
+         + reading order exactly as oracle.extract_media_span; the group's
+         images and tensors are dropped.
+    After the last span, the partial groups run in sorted-shape order.
+    Chunks are group-by-shape then arrival order, as if the whole list had
+    been staged first; rows come back in input-span order.
     """
     forward = forward or get_forward("synthetic")
     pre_eff = effective_pre(pre)
 
-    staged = []  # (idx, img, add_border, img_h, tensor, ctx)
-    quads_by_idx: dict[int, tuple] = {}  # idx -> (img, quads)
-    err_by_idx: dict[int, Exception] = {}
+    rows_by_idx: list[list[tuple]] = [[] for _ in spans]
+    groups: dict[tuple, list] = {}  # shape -> [(idx, img, add_border, img_h, tensor, ctx)]
+
+    def run_chunk(chunk: list) -> None:
+        heads = None
+        if len(chunk) > 1:
+            try:
+                db, mask = forward(np.stack([it[4] for it in chunk]))
+                heads = [(db[j : j + 1], mask[j : j + 1]) for j in range(len(chunk))]
+            except Exception:  # noqa: BLE001 — fall back to per-image
+                heads = None
+        for j, (idx, img, add_border, img_h, tensor, ctx) in enumerate(chunk):
+            try:
+                if heads is None:
+                    db_j, mask_j = forward(tensor[None, ...])
+                else:
+                    db_j, mask_j = heads[j]
+                quads, mask2d = infer_post(db_j, mask_j, ctx, opts)
+                quads, _m = detect_post(quads, mask2d, add_border, pre_eff, img_h)
+            except Exception as e:  # noqa: BLE001 — poison isolation
+                rows_by_idx[idx] = [_error_row(spans[idx], e)]
+                continue
+            rows_by_idx[idx] = _media_rows(spans[idx], img, quads)
 
     for idx, (_doc_id, ref, _off) in enumerate(spans):
         try:
@@ -99,58 +150,21 @@ def extract_media_spans_batched(
             work, add_border, img_h = detect_pre(img, pre_eff)
             if should_rearrange(work, opts.detect_size):
                 quads, _mask = detect(img, forward, opts, pre_eff)
-                quads_by_idx[idx] = (img, quads)
+                staged = None
             else:
                 tensor, ctx = infer_pre(work, opts)
-                staged.append((idx, img, add_border, img_h, tensor, ctx))
+                staged = (idx, img, add_border, img_h, tensor, ctx)
         except Exception as e:  # noqa: BLE001 — poison isolation
-            err_by_idx[idx] = e
-
-    groups: dict[tuple, list] = defaultdict(list)
-    for item in staged:
-        groups[item[4].shape].append(item)
-    for _shape, items in sorted(groups.items()):
-        for i0 in range(0, len(items), opts.max_batch_size):
-            chunk = items[i0 : i0 + opts.max_batch_size]
-            heads = None
-            if len(chunk) > 1:
-                try:
-                    db, mask = forward(np.stack([it[4] for it in chunk]))
-                    heads = [
-                        (db[j : j + 1], mask[j : j + 1]) for j in range(len(chunk))
-                    ]
-                except Exception:  # noqa: BLE001 — fall back to per-image
-                    heads = None
-            for j, (idx, img, add_border, img_h, tensor, ctx) in enumerate(chunk):
-                try:
-                    if heads is None:
-                        db_j, mask_j = forward(tensor[None, ...])
-                    else:
-                        db_j, mask_j = heads[j]
-                    quads, mask2d = infer_post(db_j, mask_j, ctx, opts)
-                    quads, _m = detect_post(quads, mask2d, add_border, pre_eff, img_h)
-                    quads_by_idx[idx] = (img, quads)
-                except Exception as e:  # noqa: BLE001 — poison isolation
-                    err_by_idx[idx] = e
-
-    rows: list[tuple] = []
-    for idx, (doc_id, ref, off) in enumerate(spans):
-        ref, off = str(ref), int(off)
-        if idx in err_by_idx:
-            e = err_by_idx[idx]
-            rows.append(
-                (doc_id, "error", f"{type(e).__name__}: {e}"[:500], ref,
-                 off * SPAN_STRIDE)
-            )
+            rows_by_idx[idx] = [_error_row(spans[idx], e)]
             continue
-        img, quads = quads_by_idx[idx]
-        if not quads:
-            rows.append((doc_id, "media", "", ref, span_order(off, 0)))
+        if staged is None:
+            rows_by_idx[idx] = _media_rows(spans[idx], img, quads)
             continue
-        ranks = reading_order(quads)
-        texts = decode_quads(img, quads)
-        for order, text in sorted(
-            (span_order(off, int(r)), t) for r, t in zip(ranks, texts)
-        ):
-            rows.append((doc_id, "media", text, ref, order))
-    return rows
+        group = groups.setdefault(tensor.shape, [])
+        group.append(staged)
+        if len(group) == opts.max_batch_size:
+            run_chunk(groups.pop(tensor.shape))
+    for shape in sorted(groups):
+        run_chunk(groups.pop(shape))
+
+    return [row for rows in rows_by_idx for row in rows]

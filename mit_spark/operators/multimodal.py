@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mit_spark.plans.pipeline import media_task_count
+
 _MAGIC = b"MITB"
 _KINDS = {"image": b"I", "video": b"V", "audio": b"A"}
 _KINDS_INV = {v: k for k, v in _KINDS.items()}
@@ -192,14 +194,15 @@ def _media_spans(spark: SparkSession, docs_df: DataFrame) -> DataFrame:
     """docs -> (doc_id, media_ref) rows, spread for the payload UDF: media
     spans arrive clustered by generating doc partition (skew: heavy docs put
     64-256 payloads in one partition) — repartition on the pair hash first,
-    same move as the detect pipeline's pre-UDF repartition."""
+    into the detect pipeline's media task count."""
     spans = (
         docs_df.select("doc_id", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "media")
         .select("doc_id", F.col("s.media_ref").alias("media_ref"))
     )
     return spans.repartition(
-        spark.sparkContext.defaultParallelism * 2, F.xxhash64("doc_id", "media_ref")
+        media_task_count(spark.sparkContext.defaultParallelism),
+        F.xxhash64("doc_id", "media_ref"),
     )
 
 

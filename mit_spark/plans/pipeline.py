@@ -48,7 +48,8 @@ def _media_udf(detector_conf: dict, pre_conf: dict, fault_inject_refs: tuple = (
         pre = PreprocessorOptions(**pre_conf)
         fault_refs = frozenset(fault_inject_refs or ())
         for pdf in batches:
-            # cross-image forward packing over the whole Arrow batch
+            # cross-image forward packing over the Arrow batch, streamed one
+            # full shape group at a time so the working set stays bounded
             # (operators/batched_detect.py): same rows as the per-span
             # extract_media_span loop — incl. per-span poison isolation
             # (SURVEY.md §2.10: a raising span becomes one kind='error' row,
@@ -66,25 +67,32 @@ def _media_udf(detector_conf: dict, pre_conf: dict, fault_inject_refs: tuple = (
 
 
 def media_task_count(par: int) -> int:
-    """Media-stage task count for ``par`` execution slots.
+    """Media-stage task count for ``par`` execution slots: two per slot.
 
-    Task granularity: small tasks bound the straggler tail of the stage
-    (idle time in the LAST wave, whose relative cost grows with
-    parallelism), but each task also carries a fixed scheduling + python
-    worker round-trip cost. Target ~128 tasks, clamped to [4x, 16x] the
-    slot count: measured at local[32], 128 tasks run the media stage 38%
-    faster than a fixed 16x (512 tasks), while low-parallelism levels keep
-    the same fine granularity (par=2 -> 32 tasks, par=8 -> 128) so the
-    N->4N scaling ladder is unaffected. On a 1000-executor cluster the 4x
-    floor keeps tasks plentiful (4000).
+    Cost model of one media task:
+      * a fixed ~0.3 s of Python-worker CPU per task (PySpark's per-task
+        worker setup), paid even by an empty partition;
+      * a per-span cost (render, resize, forward, DBNet post, OCR) that
+        grows with detect_size and varies with the span's content;
+      * the repartition spreads spans by hash, so tasks carry near-equal
+        span counts (not equal times: span cost varies).
+    Each task beyond one per slot pays the fixed cost again; what it buys is
+    a shorter straggler tail in the last wave. The media UDF bounds its own
+    working set (operators/batched_detect.py), so larger tasks do not raise
+    worker memory.
+
+    Measured only at local[1], local[3] and local[4] on a 4-vCPU host with
+    detect_size 512: at local[4] the last wave left 2-6% of the media
+    stage's slot time idle (1-2% at 16 tasks per slot), while the stage ran
+    faster. The straggler tail at local[8] and above was not re-measured
+    for this rule.
 
     ``par`` comes from defaultParallelism at PLAN time, which is correct on
     a static cluster (the north rule's N / 4N shape). Under dynamic
     allocation it reflects the executors held when the plan is built —
-    merely suboptimal (the 4x floor still yields several waves as the
-    cluster grows), never a correctness issue; pin
+    merely suboptimal as the cluster grows, never a correctness issue; pin
     spark.default.parallelism to the target size if scheduling there."""
-    return par * max(4, min(16, 128 // max(par, 1)))
+    return 2 * par
 
 
 def extract_flat(spark: SparkSession, docs_df: DataFrame, config: PipelineConfig | None = None) -> DataFrame:

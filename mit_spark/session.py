@@ -11,7 +11,9 @@ BENCH/BASELINE.md):
     (the reference pins ORT intra=4/inter=2 for ONE process,
     base-util/src/onnx.rs:59-60; for a worker-per-core model 1 is correct).
   * Arrow batch size bounded: each media span costs ~0.05-0.6 s in the UDF;
-    small batches keep tasks responsive and bound worker memory.
+    small batches keep tasks responsive. Worker memory is bounded by the
+    media UDF itself, which streams each batch one shape group at a time
+    (operators/batched_detect.py).
 """
 
 from __future__ import annotations

@@ -6,11 +6,13 @@ import numpy as np
 import pytest
 
 from mit_spark.config import DetectorOptions, PreprocessorOptions
+from mit_spark.operators import batched_detect
 from mit_spark.operators.batched_detect import extract_media_spans_batched
+from mit_spark.operators.detector import detect_pre, infer_pre
 from mit_spark.operators.forward import synthetic_forward
 from mit_spark.operators.ordering import SPAN_STRIDE
 from mit_spark.oracle import extract_media_span
-from mit_spark.synth import gen_docs
+from mit_spark.synth import gen_docs, render_media
 
 OPTS = DetectorOptions(detect_size=512)
 PRE = PreprocessorOptions()
@@ -126,3 +128,51 @@ def test_single_poison_image_errors_alone_in_packed_call():
     assert {r[4] // SPAN_STRIDE for r in err_rows} == poison_offs
     ok_want = _per_span_rows([s for s in spans if str(s[1]) != poison_ref], OPTS, PRE)
     assert [r for r in got if r[1] != "error"] == ok_want
+
+
+def test_streaming_runs_each_full_group_before_the_last_render(monkeypatch):
+    """A shape group runs its forward as soon as it holds max_batch_size
+    spans: the calls are exactly the group-by-shape-then-chunk calls of
+    staging the whole list, the first fires before the last span is
+    rendered, at most (shapes x max_batch_size) rendered spans wait at any
+    call, and the rows equal the per-span oracle."""
+    opts = DetectorOptions(detect_size=640)  # 3 tensor shapes here; 512 gives one
+    mbs = opts.max_batch_size
+    spans = [("stream", f"stream-{i}", i) for i in range(22)]
+
+    idx_of_tensor = {}
+    by_shape: dict[tuple, list[int]] = {}
+    for i, (_doc, ref, _off) in enumerate(spans):
+        work, _, _ = detect_pre(render_media(ref), PRE)
+        tensor, _ = infer_pre(work, opts)
+        idx_of_tensor[hash(tensor.tobytes())] = i
+        by_shape.setdefault(tensor.shape, []).append(i)
+    assert len(idx_of_tensor) == len(spans)
+    assert len(by_shape) >= 2
+    assert max(len(ix) for ix in by_shape.values()) >= 3 * mbs
+    want_calls = sorted(
+        tuple(ix[k : k + mbs]) for ix in by_shape.values() for k in range(0, len(ix), mbs)
+    )
+
+    renders = []
+
+    def counting_render(ref):
+        renders.append(ref)
+        return render_media(ref)
+
+    calls = []  # (spans rendered so far, span indices in the call)
+
+    def fw(batch):
+        calls.append((len(renders), tuple(idx_of_tensor[hash(b.tobytes())] for b in batch)))
+        return synthetic_forward(batch)
+
+    monkeypatch.setattr(batched_detect, "render_media", counting_render)
+    got = extract_media_spans_batched(spans, opts, PRE, forward=fw)
+
+    assert sorted(ix for _n, ix in calls) == want_calls
+    assert calls[0][0] < len(spans), "first forward waited for the last render"
+    forwarded = 0
+    for n_rendered, ix in calls:
+        assert n_rendered - forwarded <= len(by_shape) * mbs
+        forwarded += len(ix)
+    assert got == _per_span_rows(spans, opts, PRE)

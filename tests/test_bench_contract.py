@@ -2,6 +2,8 @@
 resolve to a registered query (a typo would crash the driver's per-round
 bench run), and the driver-gate window invariants must hold."""
 
+import pytest
+
 
 def test_bench_queries_all_registered():
     import bench
@@ -48,7 +50,7 @@ def test_window_rotation_rule_vs_recorded_driver_rows():
     repo = os.path.dirname(os.path.abspath(E.__file__))
     records = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
     if not records:  # fresh checkout without driver artifacts
-        return
+        pytest.skip("no driver correctness records")
     green = set()
     for path in records:
         with open(path) as f:

@@ -127,12 +127,14 @@ markup_strategy = st.lists(
 ).map("".join)
 
 
+_DUCK = duckdb.connect()
+_CLEAN_SQL = f"SELECT {clean_text_sql('?')}"
+
+
 @settings(max_examples=120, deadline=None)
 @given(markup_strategy)
 def test_clean_text_py_matches_duckdb(s):
-    con = duckdb.connect()
-    sql = clean_text_sql("?")
-    want = con.execute(f"SELECT {sql}", [s]).fetchone()[0]
+    want = _DUCK.execute(_CLEAN_SQL, [s]).fetchone()[0]
     assert clean_text_py(s) == want
 
 
@@ -163,7 +165,5 @@ def test_clean_text_three_engine_agreement_randomized(spark):
     }
     assert [got_spark[i] for i in range(len(strings))] == want_py
 
-    con = duckdb.connect()
-    sql = clean_text_sql("?")
-    got_duck = [con.execute(f"SELECT {sql}", [s]).fetchone()[0] for s in strings]
+    got_duck = [_DUCK.execute(_CLEAN_SQL, [s]).fetchone()[0] for s in strings]
     assert got_duck == want_py
