@@ -38,23 +38,34 @@ def _find(parent: list, x: int) -> int:
     return root
 
 
-def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
-    """Group 8-connected True pixels; returns a list of (N_i, 2) int64 arrays
-    of (x, y) coordinates, ordered by (min_row, min_col) of the component."""
+def _label_runs(bitmap: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Label the horizontal runs of True pixels by 8-connected component.
+
+    Returns (rows, starts, ends, order, bounds): run i covers
+    ``[starts[i], ends[i])`` of row ``rows[i]``, runs numbered in row-major
+    order; ``order[bounds[k]:bounds[k+1]]`` are component k's runs, still
+    row-major, with components in (min_row, min_col) order. Runs are found
+    inside the ink bounding box only: DBNet maps are ~1-2% ink, and the
+    full-map passes were most of the cost."""
     bm = np.asarray(bitmap, dtype=bool)
-    h, w = bm.shape
-    if not bm.any():
-        return []
+    empty = np.empty(0, dtype=np.int64)
+    ink_rows = np.flatnonzero(bm.any(axis=1))
+    if not len(ink_rows):
+        return empty, empty, empty, empty, np.zeros(1, dtype=np.int64)
+    r0, r1 = int(ink_rows[0]), int(ink_rows[-1]) + 1
+    ink_cols = np.flatnonzero(bm[r0:r1].any(axis=0))
+    c0, c1 = int(ink_cols[0]), int(ink_cols[-1]) + 1
+    w = c1 - c0
 
-    # per-row runs: starts/ends via diff on padded rows
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = bm
-    d = np.diff(padded, axis=1)
-    run_rows, run_starts = np.nonzero(d == 1)
-    _, run_ends = np.nonzero(d == -1)  # exclusive end; same count/order per row
-
+    # run starts/ends are the nonzero steps of each zero-padded row; in
+    # row-major order they alternate start, end, start, end, ...
+    padded = np.zeros((r1 - r0, w + 2), dtype=np.int8)
+    padded[:, 1:-1] = bm[r0:r1, c0:c1]
+    steps = np.flatnonzero(np.diff(padded, axis=1))
+    run_rows, run_starts = np.divmod(steps[0::2], w + 1)
+    run_ends = steps[1::2] % (w + 1)  # exclusive end
     n_runs = len(run_rows)
-    row_start_idx = np.searchsorted(run_rows, np.arange(h + 1))
+    row_start_idx = np.searchsorted(run_rows, np.arange(r1 - r0 + 1))
 
     # union runs that touch between consecutive rows (8-conn: runs [s,e)
     # touch iff s_a <= e_b and s_b <= e_a — exclusive ends give the
@@ -67,7 +78,7 @@ def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
     starts_key = run_rows * K + run_starts
     ends_key = run_rows * K + run_ends
     j_ids = np.nonzero(run_rows > 0)[0]
-    i_idx = jj = np.empty(0, dtype=np.int64)
+    i_idx = jj = empty
     if len(j_ids):
         rj = run_rows[j_ids]
         lo = np.searchsorted(ends_key, (rj - 1) * K + run_starts[j_ids], side="left")
@@ -87,22 +98,53 @@ def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
         ri, rjr = _find(parent, i), _find(parent, j)
         if ri != rjr:
             parent[max(ri, rjr)] = min(ri, rjr)
+    roots = np.array([_find(parent, i) for i in range(n_runs)], dtype=np.int64)
 
-    roots = np.fromiter((_find(parent, i) for i in range(n_runs)), dtype=np.int64)
-    comps: dict[int, list[int]] = {}
-    for idx, root in enumerate(roots):
-        comps.setdefault(int(root), []).append(idx)
+    # a root is its component's first run in row-major order, so root
+    # order IS (min_row, min_col) order; the stable sort keeps each
+    # component's runs row-major
+    order = np.argsort(roots, kind="stable")
+    sorted_roots = roots[order]
+    bounds = np.flatnonzero(np.r_[True, sorted_roots[1:] != sorted_roots[:-1], True])
+    return run_rows + r0, run_starts + c0, run_ends + c0, order, bounds
 
-    out = []
-    for _, run_ids in sorted(comps.items(), key=lambda kv: (run_rows[kv[1][0]], run_starts[kv[1][0]])):
-        xs_parts, ys_parts = [], []
-        for ri in run_ids:
-            xs = np.arange(run_starts[ri], run_ends[ri], dtype=np.int64)
-            xs_parts.append(xs)
-            ys_parts.append(np.full(len(xs), run_rows[ri], dtype=np.int64))
-        pts = np.stack([np.concatenate(xs_parts), np.concatenate(ys_parts)], axis=1)
-        out.append(pts)
-    return out
+
+def connected_components(bitmap: np.ndarray) -> list[np.ndarray]:
+    """Group 8-connected True pixels; returns a list of (N_i, 2) int64 arrays
+    of (x, y) coordinates, ordered by (min_row, min_col) of the component;
+    each component's pixels are listed row by row, left to right."""
+    rows, starts, ends, order, bounds = _label_runs(bitmap)
+    lens = (ends - starts)[order]
+    run_at = np.cumsum(lens) - lens  # first pixel of each (ordered) run
+    n_px = int(lens.sum())
+    xs = np.arange(n_px, dtype=np.int64) - np.repeat(run_at - starts[order], lens)
+    pts = np.stack([xs, np.repeat(rows[order], lens)], axis=1)
+    cuts = np.r_[run_at, n_px][bounds]
+    return [pts[a:b] for a, b in zip(cuts[:-1].tolist(), cuts[1:].tolist())]
+
+
+def component_row_extremes(bitmap: np.ndarray) -> list[np.ndarray]:
+    """Per component of ``connected_components(bitmap)`` (same order), its
+    leftmost and rightmost pixel of every row, as (2*rows, 2) int64 (x, y)
+    pairs [(min_x, y), (max_x, y), ...] with y increasing. These keep the
+    component's convex hull; they are read off the labelled runs without
+    building the component's pixels."""
+    rows, starts, ends, order, bounds = _label_runs(bitmap)
+    if not len(order):
+        return []
+    rows, starts, ends = rows[order], starts[order], ends[order]
+    comp = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+    # a (component, row) group is a block of consecutive runs; starts and
+    # ends increase along a row, so its first run has the min x and its
+    # last run the max x
+    first = np.flatnonzero(np.r_[True, (comp[1:] != comp[:-1]) | (rows[1:] != rows[:-1])])
+    last = np.r_[first[1:], len(rows)] - 1
+    out = np.empty((2 * len(first), 2), dtype=np.int64)
+    out[0::2, 0] = starts[first]
+    out[1::2, 0] = ends[last] - 1
+    out[0::2, 1] = out[1::2, 1] = rows[first]
+    cuts = 2 * np.searchsorted(comp[first], np.arange(len(bounds)))
+    return [out[a:b] for a, b in zip(cuts[:-1].tolist(), cuts[1:].tolist())]
 
 
 # ---------------------------------------------------------------------------
@@ -113,8 +155,12 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
     """Returns (4 corner points float32 (4,2), width, height) of the minimum
     -area rectangle enclosing ``points`` (pixel coordinates as points, the
     cv2.minAreaRect convention: a 1-px-wide run has zero width)."""
-    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
-    hull = convex_hull(pts)
+    return min_area_rect_of_hull(convex_hull(np.asarray(points, dtype=np.float64).reshape(-1, 2)))
+
+
+def min_area_rect_of_hull(hull: np.ndarray) -> tuple[np.ndarray, float, float]:
+    """``min_area_rect`` for a caller that already holds ``convex_hull`` of
+    its points (float64 hull vertices as convex_hull returns them)."""
     n = len(hull)
     if n == 1:
         p = hull[0]
@@ -244,32 +290,33 @@ def offset_polygon_round(poly: np.ndarray, delta: float, arc_steps: int = 8) -> 
     if area2 < 0:
         p = p[::-1]
 
-    out = []
-    for i in range(len(p)):
-        prev_ = p[i - 1]
-        cur = p[i]
-        nxt = p[(i + 1) % len(p)]
-        e0 = cur - prev_
-        e1 = nxt - cur
-        l0, l1 = np.hypot(*e0), np.hypot(*e1)
-        if l0 == 0 or l1 == 0:
-            continue
-        # outward normals for CCW polygon
-        n0 = np.array([e0[1], -e0[0]]) / l0
-        n1 = np.array([e1[1], -e1[0]]) / l1
-        a0 = np.arctan2(n0[1], n0[0])
-        a1 = np.arctan2(n1[1], n1[0])
-        # sweep from a0 to a1 the short way around (convex turn)
-        da = a1 - a0
-        while da < 0:
-            da += 2 * np.pi
-        while da > 2 * np.pi:
-            da -= 2 * np.pi
-        steps = max(int(np.ceil(da / (np.pi / arc_steps))), 1)
-        angles = a0 + da * np.arange(steps + 1) / steps
-        for a in angles:
-            out.append(cur + delta * np.array([np.cos(a), np.sin(a)]))
-    return np.array(out, dtype=np.float64)
+    # vectorized over vertices and arc samples; every value must go through
+    # the same float64 operations, in the same order, as the per-vertex
+    # reference loop in tests/test_property_geometry.py (bit-identical)
+    e0 = p - np.roll(p, 1, axis=0)  # edge into each vertex
+    e1 = np.roll(e0, -1, axis=0)  # edge out of it
+    l0 = np.hypot(e0[:, 0], e0[:, 1])
+    l1 = np.hypot(e1[:, 0], e1[:, 1])
+    keep = (l0 != 0) & (l1 != 0)
+    if not keep.any():
+        return np.empty(0, dtype=np.float64)
+    cur, e0, e1, l0, l1 = p[keep], e0[keep], e1[keep], l0[keep], l1[keep]
+    # outward normals for CCW polygon: (e_y, -e_x) / |e|, as angles
+    a0 = np.arctan2(-e0[:, 0] / l0, e0[:, 1] / l0)
+    a1 = np.arctan2(-e1[:, 0] / l1, e1[:, 1] / l1)
+    # sweep from a0 to a1 the short way around (convex turn); a0 and a1
+    # lie in [-pi, pi], so one turn brings every sweep into [0, 2*pi]
+    da = a1 - a0
+    da = np.where(da < 0, da + 2 * np.pi, da)
+    steps = np.maximum(np.ceil(da / (np.pi / arc_steps)).astype(np.int64), 1)
+    # samples 0..steps of every vertex, vertex by vertex
+    counts = steps + 1
+    j = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+    angles = np.repeat(a0, counts) + np.repeat(da, counts) * j / np.repeat(steps, counts)
+    cur = np.repeat(cur, counts, axis=0)
+    return np.stack(
+        [cur[:, 0] + delta * np.cos(angles), cur[:, 1] + delta * np.sin(angles)], axis=1
+    )
 
 
 def polygon_perimeter(poly: np.ndarray) -> float:

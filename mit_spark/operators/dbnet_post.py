@@ -20,7 +20,11 @@ Equality in this engine is oracle == pipeline and both use this module.
 
 "Contours" here are connected components of the thresholded map; the score
 and the mini box are computed over the component's convex hull, which for
-text blobs matches cv2's outer-contour behaviour.
+text blobs matches cv2's outer-contour behaviour. boxes_from_bitmap never
+builds a component's pixels: contours.component_row_extremes reads each
+component's leftmost and rightmost pixel per row straight off the labelled
+runs, and those extremes carry the whole hull. That one hull per component
+feeds both the score polygon and the min-area rectangle.
 """
 
 from __future__ import annotations
@@ -28,9 +32,10 @@ from __future__ import annotations
 import numpy as np
 
 from mit_spark.operators.contours import (
-    connected_components,
+    component_row_extremes,
     fill_polygon_mask,
     min_area_rect,
+    min_area_rect_of_hull,
     offset_polygon_round,
     polygon_perimeter,
 )
@@ -42,29 +47,15 @@ def binarize(pred: np.ndarray, thresh: float) -> np.ndarray:
     return pred > thresh
 
 
-def _row_extremes(comp: np.ndarray) -> np.ndarray:
-    """Reduce component pixels (x, y) to per-row min/max x (hull-preserving)."""
-    ys = comp[:, 1]
-    xs = comp[:, 0]
-    order = np.argsort(ys, kind="stable")
-    ys_s, xs_s = ys[order], xs[order]
-    row_starts = np.searchsorted(ys_s, np.unique(ys_s))
-    out = []
-    bounds = list(row_starts) + [len(ys_s)]
-    for i in range(len(bounds) - 1):
-        lo, hi = bounds[i], bounds[i + 1]
-        seg = xs_s[lo:hi]
-        y = ys_s[lo]
-        out.append((seg.min(), y))
-        out.append((seg.max(), y))
-    return np.array(out, dtype=np.int64)
-
-
 def get_mini_boxes(points: np.ndarray) -> tuple[np.ndarray, float]:
     """dbnet.rs:113-149: min-area rect corners ordered
     [left-top, right-top, right-bottom, left-bottom] via the x-sort +
     pairwise-y rules; returns (4x2 float32, min side length)."""
-    corners, w, h = min_area_rect(points)
+    return _mini_box(*min_area_rect(points))
+
+
+def _mini_box(corners: np.ndarray, w: float, h: float) -> tuple[np.ndarray, float]:
+    """get_mini_boxes' corner ordering, given ``min_area_rect``'s output."""
     order = np.argsort(corners[:, 0], kind="stable")
     pv = corners[order]
     if pv[1, 1] > pv[0, 1]:
@@ -126,18 +117,18 @@ def boxes_from_bitmap(
     rejected candidates keep zero rows/scores exactly like the reference
     (filtered later by filter_boxes_and_adjust)."""
     height, width = bitmap.shape
-    comps = connected_components(bitmap)
+    # per-row x-extremes carry each component's full convex hull — avoids
+    # building and hulling hundreds of thousands of interior pixels
+    comps = component_row_extremes(bitmap)
     num = min(len(comps), max_candidates)
     boxes = np.zeros((num, 4, 2), dtype=np.int64)
     scores = np.zeros(num, dtype=np.float64)
 
     for index in range(num):
-        comp = comps[index]
-        # per-row x-extremes carry the full convex hull — avoids hulling
-        # hundreds of thousands of interior pixels for big components
-        comp = _row_extremes(comp)
-        hull = convex_hull(comp.astype(np.float64))
-        points, sside = get_mini_boxes(comp)
+        # one hull per component serves both the score polygon and the
+        # min-area rectangle
+        hull = convex_hull(comps[index].astype(np.float64))
+        points, sside = _mini_box(*min_area_rect_of_hull(hull))
         if sside < min_size:
             continue
         score = box_score_fast(pred, hull)

@@ -161,9 +161,27 @@ class Quad:
     def area(self) -> float:
         """Convex-hull unsigned area (textlines.rs:33-44). Memoized: pts
         are fixed at construction and the O-family filters re-query area
-        for the same quad several times per image."""
+        for the same quad several times per image.
+
+        When the corners, in order, turn strictly the same way at every
+        vertex, they are a strictly convex quad and are their own hull: the
+        shoelace sum is then taken directly, in exact integer arithmetic,
+        which is the value the float64 hull path computes exactly for
+        coordinates below 2**25. Any other quad (collinear or repeated
+        corners, a bow-tie) goes through the hull."""
         if self._area is None:
-            self._area = polygon_area(convex_hull(self.pts.astype(np.float64)))
+            (x0, y0), (x1, y1), (x2, y2), (x3, y3) = self.pts.tolist()
+            turns = (
+                (x1 - x0) * (y2 - y1) - (y1 - y0) * (x2 - x1),
+                (x2 - x1) * (y3 - y2) - (y2 - y1) * (x3 - x2),
+                (x3 - x2) * (y0 - y3) - (y3 - y2) * (x0 - x3),
+                (x0 - x3) * (y1 - y0) - (y0 - y3) * (x1 - x0),
+            )
+            if all(t > 0 for t in turns) or all(t < 0 for t in turns):
+                twice = x0 * y1 - x1 * y0 + x1 * y2 - x2 * y1 + x2 * y3 - x3 * y2 + x3 * y0 - x0 * y3
+                self._area = abs(twice) / 2.0
+            else:
+                self._area = polygon_area(convex_hull(self.pts.astype(np.float64)))
         return self._area
 
     def structure(self) -> np.ndarray:

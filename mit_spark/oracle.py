@@ -22,8 +22,14 @@ def extract_media_span(
     media_ref: str, offset: int, opts: DetectorOptions, pre: PreprocessorOptions
 ) -> list[dict]:
     """detect -> OCR -> reading order for one media span; returns output
-    spans [(kind='media', text, media_ref, order)]. Shared verbatim by the
-    Spark mapInPandas UDF (pipeline) and the oracle below."""
+    spans [(kind='media', text, media_ref, order)]. The Spark media UDF
+    does not call this: it runs batched_detect.extract_media_spans_batched,
+    which packs forwards across spans and composes the same operators
+    (detect_pre, infer_pre, infer_post, detect_post, reading_order,
+    decode_quads); tests/test_batched_detect.py holds its rows equal to
+    this per-span path. Because both paths share those operators, that
+    equality cannot see numeric drift inside them;
+    tests/test_golden_worker_rows.py pins their output instead."""
     img = render_media(media_ref)
     forward = get_forward("synthetic")
     quads, _mask = detect(img, forward, opts, pre)

@@ -10,7 +10,9 @@ BENCH/BASELINE.md):
   * OMP/BLAS threads = 1: 32 python workers x N BLAS threads oversubscribes
     (the reference pins ORT intra=4/inter=2 for ONE process,
     base-util/src/onnx.rs:59-60; for a worker-per-core model 1 is correct).
-  * Arrow batch size bounded: each media span costs ~0.05-0.6 s in the UDF;
+  * Arrow batch size bounded: a media span costs ~13 ms in the UDF at
+    detect_size=512, ~46 ms at 1024 and ~0.2 s at 2048 (single process,
+    synthetic forward, the benchmark corpus's page sizes, 4-vCPU VM);
     small batches keep tasks responsive. Worker memory is bounded by the
     media UDF itself, which streams each batch one shape group at a time
     (operators/batched_detect.py).

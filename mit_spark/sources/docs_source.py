@@ -83,14 +83,22 @@ def read_table(
 ) -> DataFrame:
     """Engine input seam for the relational tables. ``fmt=None`` autodetects
     by file presence — parquet (the testdata default) first, then orc, json,
-    csv, xml — so every registry query runs unchanged over any corpus format
-    Spark ships a vectorized reader for; pointing sf_dir at an ORC/JSON
-    export of the same tables is the only change (tests/test_source_formats
-    proves output equality across formats). Pass ``schema`` to pin types
-    for the schemaless formats (json/csv/xml infer BIGINT/VARCHAR/DOUBLE,
-    which matches the testdata tables; columns like array<float> need the
-    pin). XML uses Spark 4's built-in reader with rowTag="row" (the
-    convention this seam's writer side uses in test_source_formats)."""
+    csv, xml — so a registry query needs no change to read another format:
+    pointing sf_dir at an export of the same tables is the only change.
+    Output equality across formats is proven only where
+    tests/test_source_formats checks it: ``documents`` over ORC, JSON and
+    XML (exact_dedup, doc_token_stats, sequence_pack), ``embeddings`` over
+    ORC, the flagship's doc ids over JSON, and a CSV round-trip with a
+    pinned schema. Pass ``schema`` to pin types for the schemaless formats
+    (json/csv/xml infer BIGINT/VARCHAR/DOUBLE, which matches the testdata
+    tables; columns like array<float> need the pin). XML uses Spark 4's
+    built-in reader with rowTag="row" (the convention this seam's writer
+    side uses in test_source_formats). Null versus empty string in XML:
+    Spark's writer omits the element for a null and writes an empty
+    element for "", and its reader maps both back (checked on Spark 4.1);
+    a corpus written by another tool may use one form for both, and then
+    the two cannot be told apart. A string holding a control character
+    that XML 1.0 forbids fails Spark's XML write."""
     import os as _os
 
     if fmt is None:

@@ -5,6 +5,11 @@ definitions on random inputs: binarize is strict-greater thresholding,
 box_score_fast equals an independently-computed masked mean,
 get_mini_boxes returns a corner-ordered min-area rect whose sides match
 its reported min side, and unclip's offset region contains the source box.
+
+The differential tests at the end keep the pixel-based per-row extremes,
+which boxes_from_bitmap read from every pixel of every component before
+``component_row_extremes`` read them off the labelled runs, as the
+reference the run-based extremes must equal exactly.
 """
 
 from __future__ import annotations
@@ -15,7 +20,12 @@ import pytest
 hyp = pytest.importorskip("hypothesis")
 from hypothesis import assume, given, settings, strategies as st  # noqa: E402
 
-from mit_spark.operators.contours import fill_polygon_mask, polygon_perimeter  # noqa: E402
+from mit_spark.operators.contours import (  # noqa: E402
+    component_row_extremes,
+    connected_components,
+    fill_polygon_mask,
+    polygon_perimeter,
+)
 from mit_spark.operators.dbnet_post import (  # noqa: E402
     binarize,
     box_score_fast,
@@ -97,3 +107,68 @@ def test_unclip_contains_source_box(poly, ratio):
     # the perimeter but by no more than the round-join circumference bound
     assume(polygon_perimeter(hull) > 0)
     assert polygon_perimeter(out_hull) >= polygon_perimeter(hull) - 1e-6
+
+
+# ---------------------------------------------------------------------------
+# differential: run-based row extremes vs the pixel-based reference
+
+
+def _row_extremes(comp: np.ndarray) -> np.ndarray:
+    """The pixel-based reduction that component_row_extremes replaced:
+    component pixels (x, y) -> per-row (min x, y), (max x, y)."""
+    ys = comp[:, 1]
+    xs = comp[:, 0]
+    order = np.argsort(ys, kind="stable")
+    ys_s, xs_s = ys[order], xs[order]
+    row_starts = np.searchsorted(ys_s, np.unique(ys_s))
+    out = []
+    bounds = list(row_starts) + [len(ys_s)]
+    for i in range(len(bounds) - 1):
+        lo, hi = bounds[i], bounds[i + 1]
+        seg = xs_s[lo:hi]
+        y = ys_s[lo]
+        out.append((seg.min(), y))
+        out.append((seg.max(), y))
+    return np.array(out, dtype=np.int64)
+
+
+def _assert_extremes_match(bm: np.ndarray) -> None:
+    want = [_row_extremes(c) for c in connected_components(bm)]
+    got = component_row_extremes(bm)
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g.dtype == w.dtype and g.shape == w.shape
+        assert np.array_equal(g, w)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(1, 24),
+    st.integers(1, 24),
+    st.integers(0, 2**32 - 1),
+    st.floats(0.05, 0.95),
+    st.integers(0, 6),
+    st.integers(0, 6),
+)
+def test_component_row_extremes_equal_pixel_reference(h, w, seed, density, top, left):
+    """Random bitmaps (mid densities give several runs per row, many of
+    them joined only diagonally), placed away from the map's origin so the
+    ink bounding-box crop is exercised."""
+    bm = np.zeros((h + top + 3, w + left + 2), dtype=bool)
+    bm[top : top + h, left : left + w] = np.random.RandomState(seed).rand(h, w) < density
+    _assert_extremes_match(bm)
+
+
+@pytest.mark.parametrize(
+    "bm",
+    [
+        np.zeros((5, 7), dtype=bool),  # empty
+        np.eye(6, dtype=bool),  # one component joined only diagonally
+        np.eye(6, dtype=bool)[::-1],  # the anti-diagonal
+        np.array([[1, 0, 1, 0, 1], [1, 1, 1, 1, 1]], dtype=bool),  # comb: 3 runs, 1 row
+        np.array([[1, 1, 1, 1, 1], [1, 0, 0, 0, 1], [1, 0, 1, 0, 1]], dtype=bool),  # U + dot
+        np.ones((1, 1), dtype=bool),  # one pixel
+    ],
+)
+def test_component_row_extremes_edge_cases(bm):
+    _assert_extremes_match(bm)

@@ -85,6 +85,37 @@ def test_connected_components_partition_is_exact(h, w, seed):
         assert bm[y, x]
 
 
+@COMMON
+@given(
+    st.integers(1, 16),
+    st.integers(1, 16),
+    st.integers(0, 2**32 - 1),
+    st.floats(0.1, 0.9),
+    st.integers(0, 9),
+    st.integers(0, 9),
+)
+def test_connected_components_order_and_offset(h, w, seed, density, top, left):
+    """The output order is part of the contract (boxes_from_bitmap's
+    max_candidates cut and the candidate order depend on it): components
+    by their first pixel in row-major order, each component's pixels
+    row-major. Ink placed anywhere in a larger map gives the same
+    components, shifted."""
+    ink = np.random.RandomState(seed).rand(h, w) < density
+    bm = np.zeros((h + top + 2, w + left + 5), dtype=bool)
+    bm[top : top + h, left : left + w] = ink
+    comps = connected_components(bm)
+    for c in comps:
+        assert c.dtype == np.int64 and c.shape[1] == 2
+        keys = [(y, x) for x, y in c.tolist()]
+        assert keys == sorted(set(keys))
+    firsts = [(int(c[0, 1]), int(c[0, 0])) for c in comps]
+    assert firsts == sorted(firsts)
+    base = connected_components(ink)
+    assert len(base) == len(comps)
+    for b, c in zip(base, comps):
+        assert np.array_equal(b + np.array([left, top]), c)
+
+
 # ---------------------------------------------------------------------------
 # convex_hull / min_area_rect geometry properties
 

@@ -4,10 +4,13 @@
 hangs on: it must be a PERMUTATION, must not depend on quad arrival order
 (detection order is contour-discovery order, which is an implementation
 detail), and must equal its own definition (RTL band, then top-to-bottom,
-then x-desc) computed by an independent scalar sort.
+then x-desc) derived independently from the boxes: band intervals and a
+pairwise precedence count.
 """
 
 from __future__ import annotations
+
+import statistics
 
 import numpy as np
 import pytest
@@ -44,18 +47,42 @@ rects_strategy = st.lists(
 )
 
 
-def _keys(quads):
-    x_center = np.array(
-        [int(q.pts[:, 0].min()) + int(q.pts[:, 0].max()) for q in quads]
-    ) / 2.0
-    y_top = np.array([int(q.pts[:, 1].min()) for q in quads])
-    widths = np.array(
-        [int(q.pts[:, 0].max()) - int(q.pts[:, 0].min()) for q in quads],
-        dtype=np.float64,
-    )
-    band_w = max(float(np.median(widths)), 1.0)
-    band = np.floor((float(x_center.max()) - x_center) / band_w).astype(np.int64)
-    return list(zip(band.tolist(), y_top.tolist(), (-x_center).tolist()))
+def _band_of(x_center: float, right: float, band_w: float) -> int:
+    """Index k of the column band (right - (k+1)*band_w, right - k*band_w]
+    that holds ``x_center``; band 0 is the rightmost."""
+    k = 0
+    while x_center <= right - (k + 1) * band_w:
+        k += 1
+    return k
+
+
+def _keys(rects):
+    """(band, y_top, x_center) per rect, derived from the (x, y, w, h)
+    tuples themselves rather than from quad corners: the band is found by
+    walking the band intervals leftwards from the rightmost center, with
+    the band width the median box width (python's statistics.median)."""
+    x_center = [x + w / 2 for x, _y, w, _h in rects]
+    band_w = max(float(statistics.median(w for _x, _y, w, _h in rects)), 1.0)
+    right = max(x_center)
+    return [
+        (_band_of(xc, right, band_w), y, xc) for xc, (_x, y, _w, _h) in zip(x_center, rects)
+    ]
+
+
+def _expected_ranks(rects) -> list[int]:
+    """Rank of each rect = how many rects precede it. A rect precedes
+    another when its band is further right, or, in the same band, its top
+    is higher, or, at the same top too, its center is further right."""
+    keys = _keys(rects)
+
+    def precedes(a, b) -> bool:
+        if a[0] != b[0]:
+            return a[0] < b[0]
+        if a[1] != b[1]:
+            return a[1] < b[1]
+        return a[2] > b[2]
+
+    return [sum(precedes(other, mine) for other in keys) for mine in keys]
 
 
 @COMMON
@@ -72,7 +99,7 @@ def test_reading_order_input_order_invariant(rects, rnd):
     """With unique sort keys, each quad's rank must not depend on the
     order quads arrive in (contour-discovery order is arbitrary)."""
     quads = _mk_quads(rects)
-    assume(len(set(_keys(quads))) == len(quads))  # no exact ties
+    assume(len(set(_keys(rects))) == len(quads))  # no exact ties
     base = reading_order(quads)
     perm = list(range(len(quads)))
     rnd.shuffle(perm)
@@ -85,16 +112,12 @@ def test_reading_order_input_order_invariant(rects, rnd):
 @COMMON
 @given(rects_strategy)
 def test_reading_order_matches_scalar_sort_definition(rects):
-    """Independent scalar re-derivation: sort indices by (band asc,
-    y_top asc, x_center desc) with python sorted()."""
+    """Independent scalar re-derivation of the sort: band intervals and a
+    pairwise precedence count, with no copy of reading_order's key
+    formula."""
     quads = _mk_quads(rects)
-    assume(len(set(_keys(quads))) == len(quads))
-    keys = _keys(quads)
-    order = sorted(range(len(quads)), key=lambda i: keys[i])
-    want = [0] * len(quads)
-    for rank, i in enumerate(order):
-        want[i] = rank
-    assert reading_order(quads) == want
+    assume(len(set(_keys(rects))) == len(quads))
+    assert reading_order(quads) == _expected_ranks(rects)
 
 
 # ---------------------------------------------------------------------------
